@@ -103,9 +103,10 @@ class JobContext:
 
     def lookup_table(self, lk: LookupSpec) -> DataFrame:
         """Dimension tables live on the target side in the reference
-        (lookups query Postgres — ``default_lookup.py:71``); try target
-        connector first, fall back to source. Cached per job so repeated
-        rules share one scan."""
+        (lookups query Postgres — ``default_lookup.py:71``); read the
+        target table, or the source one when the target has none
+        (``_read_target_or_source``). Cached per job so repeated rules
+        share one scan."""
         if lk.table in self._lookup_cache:
             # Second request ⇒ a later table reuses this dimension: pin it
             # with a LAZY localCheckpoint (materializes during that table's
@@ -122,17 +123,7 @@ class JobContext:
                 )
                 self._lookup_pinned.add(lk.table)
             return self._lookup_cache[lk.table]
-        conns = self.global_spec.connectors
-        df = None
-        errors = []
-        for attempt in (self._read_target, self._read_source):
-            try:
-                df = attempt(lk.table)
-                break
-            except Exception as e:  # noqa: BLE001 — try the other side
-                errors.append(e)
-        if df is None:
-            raise RuntimeError(f"cannot resolve lookup table {lk.table!r}: {errors}")
+        df = _read_target_or_source(self, lk.table, "lookup table")
         self._lookup_cache[lk.table] = df
         return df
 
@@ -149,6 +140,29 @@ class JobContext:
             return read_jdbc_table(self.spark, jdbc_conn, table, schema)
         raise ValueError("no target connector")
 
+    def read_target_if_exists(
+        self, table: str, schema: Optional[str] = None
+    ) -> Optional[DataFrame]:
+        """The target table, or None when it does not exist (first load)
+        or there is no target connector. Only NOT-FOUND errors mean
+        "missing" — a transient failure (JDBC connection refused, auth)
+        propagates, so no caller silently switches to its first-load
+        path or to a same-named SOURCE table."""
+        from pyspark.errors import AnalysisException
+
+        try:
+            return self._read_target(table, schema)
+        except (FileNotFoundError, AnalysisException, ValueError):
+            # FileNotFoundError: files target missing; AnalysisException:
+            # unresolved table/path; ValueError: no target connector at all
+            return None
+        except Exception as e:  # noqa: BLE001 — classified below
+            # The JDBC schema probe surfaces a missing table as a wrapped
+            # SQLException / Py4JJavaError, not AnalysisException.
+            if _is_missing_table_error(e):
+                return None
+            raise
+
     def target_table_columns(self, spec: TableSpec) -> Optional[list[str]]:
         """Target-catalog column list for auto-mapping (P2/S7 parity):
         the reference fills empty mappings from the TARGET table's
@@ -157,26 +171,9 @@ class JobContext:
         ``postgres_connector.py:111-124``). Spark reads the target's
         schema instead — JDBC metadata or the existing files dataset.
         Returns None when the target doesn't exist yet (first load);
-        auto-mapping then mirrors the source. Only NOT-FOUND errors mean
-        "first load" — a transient failure (JDBC connection refused,
-        auth) must propagate, not silently flip the mapping strategy to
-        source-mirroring (which could ship the wrong column set)."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            return self._read_target(spec.target_table, spec.target_schema).columns
-        except (FileNotFoundError, AnalysisException, ValueError):
-            # FileNotFoundError: files target missing; AnalysisException:
-            # unresolved table/path; ValueError: no target connector at all
-            return None
-        except Exception as e:  # noqa: BLE001 — classified below
-            # The JDBC schema probe surfaces a missing table as a wrapped
-            # SQLException / Py4JJavaError, not AnalysisException. Treat
-            # ONLY definite undefined-table errors as "first load"; a
-            # connection/auth failure must still propagate.
-            if _is_missing_table_error(e):
-                return None
-            raise
+        auto-mapping then mirrors the source."""
+        df = self.read_target_if_exists(spec.target_table, spec.target_schema)
+        return None if df is None else df.columns
 
     def _read_source(self, table: str) -> DataFrame:
         return resolve_source(self.spark, self.global_spec.connectors, table)
@@ -195,6 +192,19 @@ def _lazy_checkpoint(ctx: "JobContext", df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
+def _read_target_or_source(ctx: JobContext, name: str, what: str) -> DataFrame:
+    """Target table ``name``, or the source one when the target has none.
+    A target-side failure other than "missing" propagates rather than
+    silently reading a same-named table from the source."""
+    df = ctx.read_target_if_exists(name)
+    if df is not None:
+        return df
+    try:
+        return ctx._read_source(name)
+    except Exception as e:  # noqa: BLE001 — re-raised with the table named
+        raise RuntimeError(f"cannot resolve {what} {name!r}: {e}") from e
+
+
 def _mount_pairs_table(
     ctx: "JobContext",
     name: str,
@@ -210,18 +220,7 @@ def _mount_pairs_table(
     ``dedup.centroids_table`` / ``dedup.index_table``) — ONE copy of
     the try-target-then-source resolution ladder and layout
     validation, so the consumers can't drift."""
-    mounted = None
-    errors: list[Exception] = []
-    for attempt in (ctx._read_target, ctx._read_source):
-        try:
-            mounted = attempt(name)
-            break
-        except Exception as e:  # noqa: BLE001 — try the other side
-            errors.append(e)
-    if mounted is None:
-        raise RuntimeError(
-            f"{owner}: cannot resolve {kind} {field} {name!r}: {errors}"
-        )
+    mounted = _read_target_or_source(ctx, name, f"{owner}: {kind} {field}")
     missing_cols = required - set(mounted.columns)
     if missing_cols:
         raise ValueError(
@@ -2243,18 +2242,7 @@ def run_table(
 
     if spec.scd2 is not None:
         merged = _write_scd2(ctx, spec, compiled.df)
-        _write_quarantine(ctx, spec, compiled)
-        for label, obs in compiled.validation_metrics:
-            n = obs.get.get("violations", 0) or 0
-            if n:
-                logger.warning(
-                    "%s: validation %s — %d violating rows",
-                    spec.target_table, label, n,
-                )
-        _write_state_increment(ctx, spec, compiled)
-        if compiled.incremental_commit is not None:
-            compiled.incremental_commit()
-        _run_finalize_hooks(ctx, spec)
+        _after_write(ctx, spec, compiled, read_metrics=True)
         return merged
 
     out = _align_for_append(ctx, spec, compiled.df)
@@ -2292,11 +2280,9 @@ def run_table(
                 "loader or drop one of the two"
             )
         loader(out, ctx, spec)
-        _write_quarantine(ctx, spec, compiled)
-        _write_state_increment(ctx, spec, compiled)
-        if compiled.incremental_commit is not None:
-            compiled.incremental_commit()
-        _run_finalize_hooks(ctx, spec)  # reference runs finalize after EVERY load path
+        # a loader need not execute the observed plan, and .get on an
+        # unexecuted Observation blocks forever
+        _after_write(ctx, spec, compiled, read_metrics=False)
         return out
 
     if spec.shards is not None:
@@ -2363,22 +2349,31 @@ def run_table(
             options={"header": "true"} if conns.target_files.format == "csv" else None,
             extra={"source_table": spec.source_table, "target_table": spec.target_table},
         )
+    _after_write(ctx, spec, compiled, read_metrics=True)
+    return out
+
+
+def _after_write(
+    ctx: JobContext, spec: TableSpec, compiled: CompiledTable, *, read_metrics: bool
+) -> None:
+    """The tail every batch write path runs once its table is written:
+    quarantine, validation-metric warnings, state increment, the
+    incremental commit (only after a successful write) and the finalize
+    hooks (the reference runs finalize after EVERY load path).
+    ``read_metrics`` is False when the write may not have executed the
+    observed plan — the observed counters are set only by an action."""
     _write_quarantine(ctx, spec, compiled)
-    # the write ran, so the observed counters are set — reading them is
-    # non-blocking ONLY after an action (custom-loader path skips this:
-    # a loader isn't obliged to execute the observed plan, and .get on
-    # an unexecuted Observation blocks forever)
-    for label, obs in compiled.validation_metrics:
-        n = obs.get.get("violations", 0) or 0
-        if n:
-            logger.warning(
-                "%s: validation %s — %d violating rows", spec.target_table, label, n
-            )
+    if read_metrics:
+        for label, obs in compiled.validation_metrics:
+            n = obs.get.get("violations", 0) or 0
+            if n:
+                logger.warning(
+                    "%s: validation %s — %d violating rows", spec.target_table, label, n
+                )
     _write_state_increment(ctx, spec, compiled)
     if compiled.incremental_commit is not None:
         compiled.incremental_commit()
     _run_finalize_hooks(ctx, spec)
-    return out
 
 
 def _align_for_append(
@@ -2395,18 +2390,9 @@ def _align_for_append(
     emitted in target order (JDBC INSERT order safety)."""
     if spec.write_mode != "append":
         return out
-    from pyspark.errors import AnalysisException
-
-    try:
-        target = ctx._read_target(spec.target_table, spec.target_schema)
-    except (FileNotFoundError, AnalysisException, ValueError):
+    target = ctx.read_target_if_exists(spec.target_table, spec.target_schema)
+    if target is None:
         return out  # first load (or no target connector): nothing to align
-    except Exception as e:  # noqa: BLE001 — classified like target_table_columns
-        if _is_missing_table_error(e):
-            return out
-        # a transient JDBC/auth failure must NOT silently skip the
-        # drift check this function exists to enforce
-        raise
     tfields = {f.name: f.dataType for f in target.schema.fields}
     extra = [c for c in out.columns if c not in tfields]
     if extra:
@@ -2663,17 +2649,7 @@ def _write_scd2(ctx: JobContext, spec: TableSpec, updates: DataFrame) -> DataFra
         eff = str(row["m"])
     upd = updates.select(s.key, *s.compare_columns)
 
-    from pyspark.errors import AnalysisException
-
-    dim = None
-    try:
-        dim = ctx._read_target(spec.target_table, spec.target_schema)
-    except (FileNotFoundError, AnalysisException, ValueError):
-        pass
-    except Exception as e:  # noqa: BLE001 — same classification as _align_for_append
-        if not _is_missing_table_error(e):
-            raise
-
+    dim = ctx.read_target_if_exists(spec.target_table, spec.target_schema)
     if dim is None:
         merged = scd2_initial(
             upd, s.key, s.compare_columns, eff,
@@ -2907,19 +2883,13 @@ def run_job(spark: SparkSession, job: JobSpec) -> dict[str, int]:
         if spec.incremental is not None and spec.incremental.mode == "streaming":
             run_table(ctx, spec)
             n = ctx.stream_counts.get(spec.target_table, 0)
-        elif spec.scd2 is not None:
-            # the scd2 branch returns before the Observation would be
-            # attached — obs.get would block forever. Count the returned
-            # merged dimension instead (files: a fresh post-swap read;
-            # JDBC: the checkpointed frame — both cheap to count).
-            df = run_table(ctx, spec)
-            n = df.count()
-        elif loader_name not in ("default_loader",):
-            # a custom loader isn't obliged to run any Spark action on
-            # the observed plan — Observation.get would block forever.
-            # Fall back to an explicit count (the honest second pass).
-            df = run_table(ctx, spec)
-            n = df.count()
+        elif spec.scd2 is not None or loader_name not in ("default_loader",):
+            # no Observation here: the scd2 branch returns before one
+            # would be attached, and a custom loader need not run any
+            # action on the observed plan — obs.get would block forever.
+            # Count the returned frame instead (scd2: the merged
+            # dimension; a loader: the honest second pass).
+            n = run_table(ctx, spec).count()
         else:
             obs = Observation(f"etl_{spec.target_table}")
             run_table(ctx, spec, observation=obs)

@@ -16,7 +16,9 @@ shuffles are the ones the algorithms fundamentally need:
   hamming ≤ 3 ⇒ ≥ 1 of 4 chunks equal), verify with ``bit_count(a ^ b)``;
 * n-gram Jaccard: inverted-index join on shingles with a hot-shingle cap
   (classic exact near-dup at scale; the cap bounds the quadratic
-  postings blowup and is surfaced as a parameter).
+  postings blowup and is surfaced as a parameter);
+* near-dup clusters: large-star/small-star rounds over the pair edge
+  list, each closed by one exact "nothing changed" test.
 
 At 100 TB the shuffle keys are (band_id, band_hash) / shingle hashes —
 high-cardinality and uniform by construction (hash values), so no skew;
@@ -237,61 +239,46 @@ def _verify_jaccard(
     )
 
 
-def _large_star(edges: DataFrame, broadcast_mins: bool = True) -> DataFrame:
+def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star round: every node u connects its strictly-LARGER
     neighbors to min(N(u) ∪ {u}). Halves long chains from the high end.
 
-    Formulated as a partial-aggregated groupBy-min + mins join instead
-    of a window-min over the symmetrized edge list (the r12 shape) —
-    the skew-safe form (optimization guide §2.5): a hub node's full
-    neighbor list is pre-aggregated MAP-SIDE to one (u, min) row per
-    map partition before anything shuffles, where the window form
-    landed the whole list in one task. With ``broadcast_mins`` (the
-    default) the node-sized min table broadcasts and the edge list is
-    not exchanged AT ALL this round; for graphs whose node set exceeds
-    executor memory pass False and the planner shuffles both sides on
-    ``__u`` (same exposure as the window form, minus the hub-list
-    skew). Identical output set either way; the trailing per-round
-    ``distinct`` lives in ``_small_star`` (its reorientation is a no-op
-    on large-star output — every emitted edge already has __u > __v —
-    so one distinct per round covers both steps). Measured at sf0.1
-    (256-edge pair set): also marginally faster than the window form
-    (~1.75 vs ~1.9 s per clusters call)."""
+    A partial-aggregated groupBy-min + mins join rather than a window-min
+    over the symmetrized edge list: a hub node's neighbor list is
+    pre-aggregated MAP-SIDE to one (u, min) row per map partition, where
+    the window form landed the whole list in one task. The node-sized
+    min table is broadcast so the edge list is not exchanged this round
+    (the lazily checkpointed edges carry no size stats, so without the
+    hint the static plan picks a sort-merge join and shuffles them). The
+    per-round ``distinct`` lives in ``_small_star``: every edge emitted
+    here already has __u > __v, so one distinct covers both steps."""
     bi = edges.union(
         edges.select(F.col("__v").alias("__u"), F.col("__u").alias("__v"))
     )
     mins = bi.groupBy("__u").agg(F.min("__v").alias("__mn"))
-    if broadcast_mins:
-        mins = F.broadcast(mins)
     m = F.least(F.col("__u"), F.col("__mn"))
     return (
-        bi.join(mins, "__u")
+        bi.join(F.broadcast(mins), "__u")
         .filter(F.col("__v") > F.col("__u"))
         .select(F.col("__v").alias("__u"), m.alias("__v"))
     )
 
 
-def _small_star(edges: DataFrame, broadcast_mins: bool = True) -> DataFrame:
+def _small_star(edges: DataFrame) -> DataFrame:
     """One small-star round: orient every edge larger→smaller, then every
     node u connects all its (smaller) neighbors — and itself — to the
     smallest of them. Flattens local stars onto the true minimum.
 
-    groupBy-min + mins join, same rationale and skew argument as
-    ``_large_star``: the per-u minimum is partial-aggregated map-side;
-    the (u, min) self-edge is emitted per input row and collapsed by
-    the final ``distinct`` (which also dedups the large-star output
-    feeding this step). Input may carry duplicate edges — min() is
-    duplicate-insensitive and the trailing distinct restores set
-    semantics, so the per-round edge SET is identical to the join and
-    window formulations."""
+    Same broadcast groupBy-min + join as ``_large_star``. The (u, min)
+    self-edge is emitted per input row; the trailing ``distinct``
+    collapses it and restores set semantics over duplicate input edges
+    (min() is duplicate-insensitive)."""
     e = edges.select(
         F.greatest("__u", "__v").alias("__u"),
         F.least("__u", "__v").alias("__v"),
     ).filter(F.col("__u") != F.col("__v"))
     mins = e.groupBy("__u").agg(F.min("__v").alias("__m"))
-    if broadcast_mins:
-        mins = F.broadcast(mins)
-    e2 = e.join(mins, "__u")
+    e2 = e.join(F.broadcast(mins), "__u")
     return (
         e2.filter(F.col("__v") != F.col("__m"))
         .select(F.col("__v").alias("__u"), F.col("__m").alias("__v"))
@@ -306,7 +293,6 @@ def near_dup_clusters(
     id_i: str = "id_i",
     id_j: str = "id_j",
     max_iter: int = 30,
-    broadcast_mins: bool = True,
 ) -> DataFrame:
     """Connected components over a near-dup pair set → (doc_id,
     cluster_id) with cluster_id = the component's minimum doc id.
@@ -328,79 +314,47 @@ def near_dup_clusters(
     list only (orders of magnitude smaller than the corpus);
     ``localCheckpoint`` truncates lineage per round so plans stay flat
     (library operators must not ``persist`` — the caller can't
-    unpersist). Convergence is detected cheaply per round by an
-    order-insensitive edge-set fingerprint (count + bit_xor of
-    xxhash64), then CONFIRMED exactly once at the declared fixpoint via
-    a symmetric anti-join emptiness check — a fingerprint collision
-    cannot silently corrupt survivor groups. Non-convergence raises
-    loudly: silent fallthrough would split one duplicate group into
-    several survivors.
+    unpersist). The loop stops at the first round that leaves the edge
+    set unchanged, an exact test made every round. Non-convergence
+    within ``max_iter`` rounds raises: silent fallthrough would split
+    one duplicate group into several survivors.
     """
     # checkpoint the pair projection ONCE — nodes and edges both derive
-    # from it, and without this the (potentially expensive) upstream
-    # pair pipeline (e.g. MinHash) would execute twice. This is the only
-    # EAGER checkpoint: every per-round checkpoint below is lazy
-    # (eager=False), so the round's convergence-fingerprint action both
-    # computes AND materializes that round's edges in ONE job — the
-    # eager form cost a second job per round (measured: the loop is
-    # job-count-bound at small scale, ~60 jobs for a sf0.1 cluster run).
+    # from it, so the (potentially expensive) upstream pair pipeline
+    # (e.g. MinHash) executes once
     raw = (
         pairs.select(F.col(id_i).alias("__u"), F.col(id_j).alias("__v"))
         .filter(F.col("__u") != F.col("__v"))
         .localCheckpoint()
     )
-    # nodes has exactly ONE consumer (the final labeling join) and a
-    # 1-hop lineage off the checkpointed raw — checkpointing it bought
-    # nothing and cost an up-front job
     nodes = (
         raw.select(F.col("__u").alias("__id"))
         .union(raw.select(F.col("__v").alias("__id")))
         .distinct()
     )
     edges = raw.distinct().localCheckpoint(eager=False)
-
-    def fingerprint(e: DataFrame):
-        return e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(__u, __v))").alias("x"),
-        ).collect()[0]
-
-    prev = None
-    converged = False
     for _ in range(max_iter):
-        edges = _small_star(
-            _large_star(edges, broadcast_mins), broadcast_mins
-        ).localCheckpoint(eager=False)
-        sig = fingerprint(edges)
-        if prev is not None and sig == prev:
-            converged = True
+        # checkpointed: the change test and the next round share one copy
+        nxt = _small_star(_large_star(edges)).localCheckpoint(eager=False)
+        # both sides are edge SETS (each ends in a distinct), so an edge
+        # seen once in their union is in exactly one of them — one
+        # shuffle decides exactly. A symmetric anti-join decides the same
+        # in 7-8 Spark jobs per round under AQE, this in 3.
+        changed = (
+            nxt.unionByName(edges)
+            .groupBy("__u", "__v")
+            .count()
+            .filter(F.col("count") == 1)
+            .limit(1)
+            .count()
+        )
+        edges = nxt
+        if not changed:
             break
-        prev = sig
-    if not converged:
+    else:
         raise RuntimeError(
             f"near_dup_clusters did not converge in {max_iter} rounds — "
             "raise max_iter (large-star/small-star needs O(log n) rounds)"
-        )
-    # The fingerprint is probabilistic (~2^-64 collision per round, but
-    # a silent collision would corrupt survivor groups): confirm the
-    # declared fixpoint EXACTLY, once — one more LS/SS application and a
-    # symmetric anti-join emptiness check (one job: both directions
-    # unioned under a single short-circuiting limit; nxt is lazily
-    # checkpointed so its two consumers share one materialization).
-    nxt = _small_star(
-        _large_star(edges, broadcast_mins), broadcast_mins
-    ).localCheckpoint(eager=False)
-    changed = (
-        nxt.join(edges, ["__u", "__v"], "left_anti")
-        .unionByName(edges.join(nxt, ["__u", "__v"], "left_anti"))
-        .limit(1)
-        .count()
-    )
-    if changed:
-        raise RuntimeError(
-            "near_dup_clusters: fingerprint declared convergence on a "
-            "non-fixpoint edge set (hash collision) — rerun with a higher "
-            "max_iter"
         )
     # star edges: (node → component min) for every non-min node
     return nodes.join(

@@ -1081,22 +1081,11 @@ def main(argv: list[str] | None = None) -> int:
         return 1 if n_fatal else 0
 
     if args.profile:
-        from pyspark.errors import AnalysisException
-
-        from .compiler import _is_missing_table_error
+        from .compiler import _read_target_or_source
         from .operators.profile import profile_table
 
         ctx = JobContext(spark, job.global_spec)
-        try:
-            df = ctx._read_target(args.profile)
-        except (FileNotFoundError, AnalysisException, ValueError):
-            df = ctx._read_source(args.profile)
-        except Exception as e:  # noqa: BLE001 — classified like the compiler's probes
-            if not _is_missing_table_error(e):
-                # a transient JDBC failure must NOT silently profile the
-                # SOURCE table of the same name instead
-                raise
-            df = ctx._read_source(args.profile)
+        df = _read_target_or_source(ctx, args.profile, "table")
         profile_table(df).show(truncate=False)
         return 0
 

@@ -3,6 +3,8 @@ n-gram Jaccard (SURVEY.md §2.11)."""
 
 from __future__ import annotations
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from orion_etl_oracle_to_postgres_spark.operators import dedup
@@ -101,6 +103,16 @@ def test_near_dup_clusters_transitive(spark):
         20: 20, 21: 20, 22: 20,
     }
 
+    def clusters(rows):
+        df = spark.createDataFrame(rows, "id_i long, id_j long")
+        return {r["doc_id"]: r["cluster_id"] for r in near_dup_clusters(df).collect()}
+
+    # no pairs → no clusters (the first round already changes nothing)
+    assert clusters([]) == {}
+    # duplicate, reversed and self pairs cluster like the clean pair set
+    # (a self pair is no evidence of duplication: node 3 stays out)
+    assert clusters([(1, 2), (2, 1), (1, 2), (3, 3)]) == clusters([(1, 2)]) == {1: 1, 2: 1}
+
 
 def test_near_dup_clusters_long_chain_converges(spark):
     """A 12-node path graph needs several propagation rounds — pins the
@@ -158,6 +170,63 @@ def test_near_dup_clusters_adversarial_topologies(spark):
     assert all(out[i] == 70 for i in range(70, 76))
     assert all(out[i] == 80 for i in list(range(80, 84)) + list(range(90, 93)))
     assert out[300] == 300 and out[301] == 300
+
+
+def _union_find_clusters(edges):
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 40), st.integers(0, 40)), max_size=60
+    )
+)
+def test_near_dup_clusters_matches_union_find(spark, edges):
+    """Random small graphs (duplicates, reversed and self pairs
+    included): the components equal a pure-Python union-find's, each
+    labelled by its minimum node."""
+    from orion_etl_oracle_to_postgres_spark.operators.dedup import near_dup_clusters
+
+    pairs = spark.createDataFrame(edges, "id_i long, id_j long")
+    out = {r["doc_id"]: r["cluster_id"] for r in near_dup_clusters(pairs).collect()}
+    assert out == _union_find_clusters(edges)
+
+
+def test_near_dup_clusters_job_count(spark):
+    """Job-count guard for the convergence loop on a 3-clique plus a
+    2-edge chain (two rounds: one that relabels, one that changes
+    nothing). With one exact change test per round the call runs 24
+    Spark jobs; the earlier per-round fingerprint plus a confirming
+    extra round and anti-join ran 36 (both local[8])."""
+    from orion_etl_oracle_to_postgres_spark.operators.dedup import near_dup_clusters
+
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12)], "id_i long, id_j long"
+    )
+    sc.setJobGroup("near_dup_clusters_job_count", "job-count guard")
+    try:
+        out = {r["doc_id"]: r["cluster_id"] for r in near_dup_clusters(pairs).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10}
+    jobs = sc.statusTracker().getJobIdsForGroup("near_dup_clusters_job_count")
+    assert len(jobs) < 36, len(jobs)
 
 
 def test_minhash_bands_rejects_nondivisible(spark):

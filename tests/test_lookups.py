@@ -239,3 +239,43 @@ def test_non_versioned_lookup_unchanged(spark):
                     on_missing="null")
     out = {r.id: r.code for r in external_lookup(fact, "code", lk, dim).collect()}
     assert out == {1: "v1", 2: None}
+
+
+@pytest.mark.parametrize(
+    "target_error, falls_back",
+    [
+        (RuntimeError("Connection refused"), False),
+        (RuntimeError("password authentication failed for user etl"), False),
+        (RuntimeError("ERROR 42X05: Table/View 'NATION' does not exist."), True),
+        (RuntimeError('ERROR: relation "nation" does not exist (SQLSTATE 42P01)'), True),
+    ],
+)
+def test_lookup_falls_back_to_source_only_when_target_table_missing(
+    spark, sf_dir, target_error, falls_back
+):
+    """A missing target table falls back to the same-named source table;
+    any other target-side failure (network, auth) propagates instead of
+    silently reading the source."""
+    from orion_etl_oracle_to_postgres_spark.compiler import JobContext
+    from orion_etl_oracle_to_postgres_spark.spec import (
+        ConnectorsSpec,
+        FilesConnectorSpec,
+        GlobalSpec,
+    )
+
+    g = GlobalSpec(
+        connectors=ConnectorsSpec(source_files=FilesConnectorSpec(base_path=sf_dir))
+    )
+    ctx = JobContext(spark, g)
+
+    def failing_target(table, schema=None):
+        raise target_error
+
+    ctx._read_target = failing_target
+    lk = LookupSpec(table="nation", key_column="n_nationkey", value_column="n_name")
+    if falls_back:
+        assert ctx.lookup_table(lk).count() == 25
+    else:
+        with pytest.raises(RuntimeError) as info:
+            ctx.lookup_table(lk)
+        assert info.value is target_error

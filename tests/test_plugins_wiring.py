@@ -277,3 +277,56 @@ def test_run_job_with_custom_loader_does_not_hang(spark, sf_dir, tmp_path):
         ],
     )
     assert run_job(spark, job) == {"r_al": 5}
+
+
+@pytest.mark.parametrize("write_path", ["default", "scd2", "loader"])
+def test_every_write_path_writes_quarantine_and_finalizes_once(
+    spark, tmp_path, write_path
+):
+    """The default sink, the scd2 merge and a custom loader all run the
+    same post-write tail: the quarantine table is written and each
+    transform plugin's ``finalize`` hook runs exactly once."""
+    from orion_etl_oracle_to_postgres_spark.spec import Scd2Spec, ValidationSpec
+
+    src = tmp_path / "src"
+    spark.createDataFrame([(1, "AA"), (2, "xx")], "id int, code string").write.parquet(
+        str(src / "t.parquet")
+    )
+    calls = []
+
+    @registry.register("transform", "wire_tail_transform")
+    def passthrough(df, ctx):
+        return df
+
+    passthrough.finalize = lambda ctx, spec: calls.append(spec.target_table)
+
+    @registry.register("loader", "wire_tail_loader")
+    def counting_loader(df, ctx, spec):
+        df.count()
+
+    spec = TableSpec(
+        source_table="t",
+        target_table="t_out",
+        quarantine_table="t_rejects",
+        transform_plugins=["wire_tail_transform"],
+        mappings=[
+            MappingSpec(source="id", target="id"),
+            MappingSpec(
+                source="code",
+                target="code",
+                validation=[
+                    ValidationSpec(type="regex", pattern="[A-Z]+", on_fail="quarantine")
+                ],
+            ),
+        ],
+        scd2=(
+            Scd2Spec(key="id", compare_columns=["code"], effective_time="2024-01-01")
+            if write_path == "scd2"
+            else None
+        ),
+        loader_plugin="wire_tail_loader" if write_path == "loader" else None,
+    )
+    run_table(_ctx(spark, str(src), target_path=tmp_path / "out"), spec)
+    rejects = spark.read.parquet(str(tmp_path / "out" / "t_rejects")).collect()
+    assert [r["id"] for r in rejects] == [2]
+    assert calls == ["t_out"]
