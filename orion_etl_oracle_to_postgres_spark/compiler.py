@@ -395,6 +395,7 @@ def _apply_dedup(ctx: "JobContext", df, spec: TableSpec):
             shingle_n=d.shingle_n,
             num_hashes=d.num_hashes,
             bands=d.bands,
+            seed=d.seed,
             threshold=d.threshold,
         )
 

@@ -17,8 +17,10 @@ shuffles are the ones the algorithms fundamentally need:
 * n-gram Jaccard: inverted-index join on shingles with a hot-shingle cap
   (classic exact near-dup at scale; the cap bounds the quadratic
   postings blowup and is surfaced as a parameter);
-* near-dup clusters: large-star/small-star rounds over the pair edge
-  list, each closed by one exact "nothing changed" test.
+* near-dup clusters: one probe collects the pair edge list when it has
+  at most ``_DRIVER_EDGES_LIMIT`` edges and labels components on the
+  driver; larger edge lists run large-star/small-star rounds, each
+  closed by one exact "nothing changed" test.
 
 At 100 TB the shuffle keys are (band_id, band_hash) / shingle hashes —
 high-cardinality and uniform by construction (hash values), so no skew;
@@ -27,6 +29,7 @@ AQE handles residual imbalance.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -287,6 +290,55 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+# Edge lists up to this size are clustered on the driver: ids-only
+# pairs, so 1M long edges are ~16 MB in Arrow (a few times that while
+# labelling). Larger lists take the distributed rounds.
+_DRIVER_EDGES_LIMIT = 1_000_000
+
+
+def _min_labels(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
+    """Component-minimum label per node of the graph on nodes 0..n-1
+    with edges (a[k], b[k]). Parent pointers only ever point at smaller
+    nodes, so every tree's root is its minimum: each round hooks the
+    roots of every edge that spans two trees onto the smaller root
+    (``np.minimum.at`` keeps the smallest of several hooks), then
+    pointer-jumps until every node points at its root. Each round
+    removes at least one root; stops when no edge spans two trees."""
+    p = np.arange(n)
+    while True:
+        ra, rb = p[a], p[b]
+        span = ra != rb
+        if not span.any():
+            return p
+        ra, rb = ra[span], rb[span]
+        lo = np.minimum(ra, rb)
+        np.minimum.at(p, ra, lo)
+        np.minimum.at(p, rb, lo)
+        while True:
+            pp = p[p]
+            if np.array_equal(pp, p):
+                break
+            p = pp
+
+
+def _driver_clusters(edges, spark, schema) -> DataFrame:
+    """(doc_id, cluster_id) from an edge list collected as an Arrow
+    table of (__u, __v), as a local DataFrame with ``schema``. Ids are
+    ranked by Arrow's sort (binary order for strings, as Spark's
+    ``min``), so the minimum rank in a component is its minimum id."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    u, v = edges.column("__u"), edges.column("__v")
+    ids = pc.unique(pa.chunked_array(u.chunks + v.chunks, type=u.type))
+    ids = ids.take(pc.array_sort_indices(ids))
+    a = pc.index_in(u, value_set=ids).to_numpy()
+    b = pc.index_in(v, value_set=ids).to_numpy()
+    labels = _min_labels(a, b, len(ids))
+    table = pa.table({"doc_id": ids, "cluster_id": ids.take(labels)})
+    return spark.createDataFrame(table, schema=schema)
+
+
 def near_dup_clusters(
     pairs: DataFrame,
     *,
@@ -295,33 +347,44 @@ def near_dup_clusters(
     max_iter: int = 30,
 ) -> DataFrame:
     """Connected components over a near-dup pair set → (doc_id,
-    cluster_id) with cluster_id = the component's minimum doc id.
+    cluster_id) with cluster_id = the component's minimum doc id, one
+    row per id that appears in a pair (self pairs and NULL ids are no
+    evidence and are dropped; duplicate and reversed pairs collapse).
+    Both columns keep the type of the input id columns.
 
     Near-dup PAIRS aren't the end product of dedup — duplicates form
     transitive groups (A~B, B~C ⇒ {A,B,C} even when A~C is below
     threshold), and survivor selection needs one winner per GROUP.
 
-    Algorithm: alternating large-star/small-star (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — each
-    round contracts chains multiplicatively, so convergence is
-    O(log n) rounds for ANY topology, vs O(diameter) for plain
-    min-label propagation (a 1000-link templated-spam chain converges
-    in ~10 rounds here where propagation needs 1000). At the fixpoint
-    the edge set IS the star graph: every non-minimum node holds one
-    edge to its component's minimum.
+    Two paths, chosen by the observed edge count alone. The pair
+    projection is checkpointed once, then one probe job collects at
+    most ``_DRIVER_EDGES_LIMIT + 1`` edges through Arrow:
 
-    Each round is two group-by-min aggregates + joins over the EDGE
-    list only (orders of magnitude smaller than the corpus);
-    ``localCheckpoint`` truncates lineage per round so plans stay flat
-    (library operators must not ``persist`` — the caller can't
-    unpersist). The loop stops at the first round that leaves the edge
-    set unchanged, an exact test made every round. Non-convergence
-    within ``max_iter`` rounds raises: silent fallthrough would split
-    one duplicate group into several survivors.
+    * at most ``_DRIVER_EDGES_LIMIT`` edges (1M long pairs ≈ 16 MB):
+      the probe holds the whole edge list, components are labelled in
+      memory (``_min_labels``) and the result is a local DataFrame.
+      Two Spark jobs in all, whatever the graph's shape — pair sets
+      are ids-only and usually orders of magnitude smaller than the
+      corpus.
+    * more edges: alternating large-star/small-star rounds (Kiveris
+      et al., "Connected Components in MapReduce and Beyond", SoCC'14)
+      over the distributed edge list. Each round contracts chains
+      multiplicatively, so convergence is O(log n) rounds for ANY
+      topology, vs O(diameter) for plain min-label propagation. At the
+      fixpoint the edge set IS the star graph: every non-minimum node
+      holds one edge to its component's minimum. Each round is two
+      group-by-min aggregates + joins over the EDGE list only;
+      ``localCheckpoint`` truncates lineage per round so plans stay
+      flat (library operators must not ``persist`` — the caller can't
+      unpersist). The loop stops at the first round that leaves the
+      edge set unchanged, an exact test made every round.
+      Non-convergence within ``max_iter`` rounds raises: silent
+      fallthrough would split one duplicate group into several
+      survivors. ``max_iter`` does not apply to the driver path.
     """
-    # checkpoint the pair projection ONCE — nodes and edges both derive
-    # from it, so the (potentially expensive) upstream pair pipeline
-    # (e.g. MinHash) executes once
+    # checkpoint the pair projection ONCE — the probe, nodes and edges
+    # all derive from it, so the (potentially expensive) upstream pair
+    # pipeline (e.g. MinHash) executes once
     raw = (
         pairs.select(F.col(id_i).alias("__u"), F.col(id_j).alias("__v"))
         .filter(F.col("__u") != F.col("__v"))
@@ -332,6 +395,18 @@ def near_dup_clusters(
         .union(raw.select(F.col("__v").alias("__id")))
         .distinct()
     )
+    id_type = nodes.schema["__id"].dataType
+    probe = (
+        raw.select(F.col("__u").cast(id_type), F.col("__v").cast(id_type))
+        .limit(_DRIVER_EDGES_LIMIT + 1)
+        .toArrow()
+    )
+    if probe.num_rows <= _DRIVER_EDGES_LIMIT:
+        schema = nodes.select(
+            F.col("__id").alias("doc_id"), F.col("__id").alias("cluster_id")
+        ).schema
+        return _driver_clusters(probe, raw.sparkSession, schema)
+    del probe
     edges = raw.distinct().localCheckpoint(eager=False)
     for _ in range(max_iter):
         # checkpointed: the change test and the next round share one copy

@@ -113,14 +113,15 @@ def scan_fanout(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     # one core. The key is the FIRST SCALAR column (doc_id/vec_id/...):
     # hashing string/array payload columns (doc text, embedding vectors)
     # per row just to pick a partition is wasted CPU, and an id column
-    # alone spreads uniformly under xxhash64. Tables with no scalar
-    # column hash their first non-map columns; an all-map table falls
-    # back to round-robin.
+    # alone spreads uniformly under xxhash64. Boolean and date columns
+    # are not keys: a flag hashes into 2 buckets and a load date into a
+    # handful, leaving most of the ``cores`` partitions empty. Tables
+    # with no such scalar column hash their first non-map columns; an
+    # all-map table falls back to round-robin.
     parts = cores
     scalar = [
         c for c, t in df.dtypes
-        if t in ("tinyint", "smallint", "int", "bigint", "float",
-                 "double", "date", "boolean")
+        if t in ("tinyint", "smallint", "int", "bigint", "float", "double")
         or t.startswith(("decimal", "timestamp"))
     ]
     if scalar:

@@ -219,8 +219,10 @@ class DedupSpec(BaseModel):
     ``text_column`` (case/whitespace/punctuation-insensitive).
     ``method: minhash`` is NEAR-dup dedup: MinHash+LSH candidate pairs
     exact-verified at ``threshold`` Jaccard, clustered transitively
-    (large-star/small-star), every non-minimum cluster member dropped —
-    the full LLM-corpus dedup pipeline from YAML alone.
+    (``operators/dedup.py:near_dup_clusters``: in memory on the driver
+    for pair sets up to 1M edges, large-star/small-star rounds above
+    that), every non-minimum cluster member dropped — the full
+    LLM-corpus dedup pipeline from YAML alone.
     ``method: semantic`` is the embedding-space twin: sign-LSH cosine
     pairs over ``vector_column`` (``threshold`` is a COSINE here),
     same clustering, same min-id survivor rule — paraphrase dedup from
@@ -272,7 +274,7 @@ class DedupSpec(BaseModel):
     #: parameters (num_hashes/bands/shingle_n/seed) MUST match the
     #: build; persist them beside the index (the layout-marker pattern).
     index_table: Optional[str] = None
-    #: semantic knobs
+    #: semantic knobs (``seed`` also seeds minhash/soft hashing)
     n_planes: int = 8
     seed: int = 42
     #: semdedup knob: number of deterministic candidate cells

@@ -3,6 +3,7 @@ n-gram Jaccard (SURVEY.md §2.11)."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -87,89 +88,118 @@ def test_simhash_identical_texts_zero_hamming(spark):
     assert len(rows) == 1 and rows[0]["hamming"] == 0
 
 
-def test_near_dup_clusters_transitive(spark):
+def _force_distributed(mp):
+    """Send every edge list through the large-star/small-star rounds.
+    -1, not 0: with a limit of 0 an empty edge list (0 <= 0) would
+    still take the driver path."""
+    mp.setattr(dedup, "_DRIVER_EDGES_LIMIT", -1)
+
+
+def _clusters(spark, rows):
+    """{doc_id: cluster_id}, checking there is one row per id."""
+    df = spark.createDataFrame(rows, "id_i long, id_j long")
+    out = dedup.near_dup_clusters(df).collect()
+    labels = {r["doc_id"]: r["cluster_id"] for r in out}
+    assert len(labels) == len(out)
+    return labels
+
+
+def _check_transitive(spark):
     """A~B and B~C must cluster {A,B,C} together even without an A~C
     pair; disconnected pairs stay separate; labels are component mins."""
-    from orion_etl_oracle_to_postgres_spark.operators.dedup import near_dup_clusters
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)],
-        "id_i long, id_j long",
+    out = _clusters(
+        spark, [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)]
     )
-    out = {r["doc_id"]: r["cluster_id"] for r in near_dup_clusters(pairs).collect()}
     assert out == {
         1: 1, 2: 1, 3: 1, 4: 1,          # 4-node chain: diameter > 1 round
         10: 10, 11: 10,
         20: 20, 21: 20, 22: 20,
     }
-
-    def clusters(rows):
-        df = spark.createDataFrame(rows, "id_i long, id_j long")
-        return {r["doc_id"]: r["cluster_id"] for r in near_dup_clusters(df).collect()}
-
     # no pairs → no clusters (the first round already changes nothing)
-    assert clusters([]) == {}
+    assert _clusters(spark, []) == {}
     # duplicate, reversed and self pairs cluster like the clean pair set
     # (a self pair is no evidence of duplication: node 3 stays out)
-    assert clusters([(1, 2), (2, 1), (1, 2), (3, 3)]) == clusters([(1, 2)]) == {1: 1, 2: 1}
+    assert (
+        _clusters(spark, [(1, 2), (2, 1), (1, 2), (3, 3)])
+        == _clusters(spark, [(1, 2)])
+        == {1: 1, 2: 1}
+    )
 
 
-def test_near_dup_clusters_long_chain_converges(spark):
+def _check_long_chain(spark):
     """A 12-node path graph needs several propagation rounds — pins the
     fixpoint loop, not just one round of neighbor mins."""
-    from orion_etl_oracle_to_postgres_spark.operators.dedup import near_dup_clusters
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(100, 112)], "id_i long, id_j long"
-    )
-    out = near_dup_clusters(pairs).collect()
-    assert {r["cluster_id"] for r in out} == {100}
+    out = _clusters(spark, [(i, i + 1) for i in range(100, 112)])
+    assert set(out.values()) == {100}
     assert len(out) == 13
 
 
-def test_near_dup_clusters_raises_when_unconverged(spark):
-    import pytest as _pytest
-
-    from orion_etl_oracle_to_postgres_spark.operators.dedup import near_dup_clusters
-
-    # 65-node chain: two large/small-star rounds can't reach fixpoint
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(200, 264)], "id_i long, id_j long"
-    )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        near_dup_clusters(chain, max_iter=2)
-
-
-def test_near_dup_clusters_deep_path_graph(spark):
+def _check_deep_path(spark):
     """A path component of depth 200 — min-label propagation needs one
     round per hop (> max_iter=30, the pre-r3 code refused it);
     large-star/small-star contracts it in O(log n) rounds."""
-    from orion_etl_oracle_to_postgres_spark.operators.dedup import near_dup_clusters
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1000, 1200)], "id_i long, id_j long"
-    )
-    out = near_dup_clusters(pairs).collect()  # default max_iter=30
+    out = _clusters(spark, [(i, i + 1) for i in range(1000, 1200)])
     assert len(out) == 201
-    assert {r["cluster_id"] for r in out} == {1000}
+    assert set(out.values()) == {1000}
 
 
-def test_near_dup_clusters_adversarial_topologies(spark):
+def _check_adversarial(spark):
     """Star + cycle + two joined cliques + isolated pair, one call."""
-    from orion_etl_oracle_to_postgres_spark.operators.dedup import near_dup_clusters
-
     edges = []
     edges += [(50, i) for i in range(51, 60)]           # star centered high
     edges += [(i, i + 1) for i in range(70, 75)] + [(75, 70)]  # cycle
     edges += [(a, b) for a in range(80, 84) for b in range(a + 1, 84)]  # clique
     edges += [(83, 90)] + [(a, b) for a in range(90, 93) for b in range(a + 1, 93)]
     edges += [(300, 301)]
-    pairs = spark.createDataFrame(edges, "id_i long, id_j long")
-    out = {r["doc_id"]: r["cluster_id"] for r in near_dup_clusters(pairs).collect()}
+    out = _clusters(spark, edges)
     assert all(out[i] == 50 for i in range(50, 60))
     assert all(out[i] == 70 for i in range(70, 76))
     assert all(out[i] == 80 for i in list(range(80, 84)) + list(range(90, 93)))
     assert out[300] == 300 and out[301] == 300
+
+
+_CLUSTER_CHECKS = {
+    "transitive": _check_transitive,
+    "long_chain": _check_long_chain,
+    "deep_path": _check_deep_path,
+    "adversarial": _check_adversarial,
+}
+
+
+def test_near_dup_clusters_transitive(spark):
+    _check_transitive(spark)
+
+
+def test_near_dup_clusters_long_chain_converges(spark):
+    _check_long_chain(spark)
+
+
+def test_near_dup_clusters_deep_path_graph(spark):
+    _check_deep_path(spark)
+
+
+def test_near_dup_clusters_adversarial_topologies(spark):
+    _check_adversarial(spark)
+
+
+@pytest.mark.parametrize("check", sorted(_CLUSTER_CHECKS))
+def test_near_dup_clusters_distributed_path(spark, monkeypatch, check):
+    """The same clustering checks, run through the large-star/small-star
+    rounds that graphs above the driver limit take (the tests above
+    run the default, driver, path)."""
+    _force_distributed(monkeypatch)
+    _CLUSTER_CHECKS[check](spark)
+
+
+def test_near_dup_clusters_raises_when_unconverged(spark, monkeypatch):
+    # the driver path has no rounds: only the distributed loop can fail
+    _force_distributed(monkeypatch)
+    # 65-node chain: two large/small-star rounds can't reach fixpoint
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(200, 264)], "id_i long, id_j long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.near_dup_clusters(chain, max_iter=2)
 
 
 def _union_find_clusters(edges):
@@ -189,44 +219,154 @@ def _union_find_clusters(edges):
     return {x: find(x) for x in parent}
 
 
-@settings(max_examples=10, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 40), st.integers(0, 40)), max_size=60
-    )
+_RANDOM_GRAPHS = st.lists(
+    st.tuples(st.integers(0, 40), st.integers(0, 40)), max_size=60
 )
+
+
+@settings(max_examples=10, deadline=None)
+@given(_RANDOM_GRAPHS)
 def test_near_dup_clusters_matches_union_find(spark, edges):
     """Random small graphs (duplicates, reversed and self pairs
     included): the components equal a pure-Python union-find's, each
     labelled by its minimum node."""
-    from orion_etl_oracle_to_postgres_spark.operators.dedup import near_dup_clusters
-
-    pairs = spark.createDataFrame(edges, "id_i long, id_j long")
-    out = {r["doc_id"]: r["cluster_id"] for r in near_dup_clusters(pairs).collect()}
-    assert out == _union_find_clusters(edges)
+    assert _clusters(spark, edges) == _union_find_clusters(edges)
 
 
-def test_near_dup_clusters_job_count(spark):
-    """Job-count guard for the convergence loop on a 3-clique plus a
-    2-edge chain (two rounds: one that relabels, one that changes
-    nothing). With one exact change test per round the call runs 24
-    Spark jobs; the earlier per-round fingerprint plus a confirming
-    extra round and anti-join ran 36 (both local[8])."""
-    from orion_etl_oracle_to_postgres_spark.operators.dedup import near_dup_clusters
+@settings(max_examples=10, deadline=None)
+@given(_RANDOM_GRAPHS)
+def test_near_dup_clusters_matches_union_find_distributed(spark, edges):
+    """As above, through the large-star/small-star rounds."""
+    with pytest.MonkeyPatch.context() as mp:
+        _force_distributed(mp)
+        assert _clusters(spark, edges) == _union_find_clusters(edges)
 
-    sc = spark.sparkContext
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12)], "id_i long, id_j long"
+
+@settings(max_examples=10, deadline=None)
+@given(
+    st.lists(
+        st.tuples(st.integers(-5, 300), st.integers(-5, 300)), max_size=150
     )
-    sc.setJobGroup("near_dup_clusters_job_count", "job-count guard")
+)
+def test_near_dup_clusters_paths_agree(spark, edges):
+    """Differential: the driver and distributed paths return the same
+    (doc_id, cluster_id) set for the same random graph."""
+    pairs = spark.createDataFrame(edges, "id_i long, id_j long")
+    driver = {tuple(r) for r in dedup.near_dup_clusters(pairs).collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        _force_distributed(mp)
+        dist = {tuple(r) for r in dedup.near_dup_clusters(pairs).collect()}
+    assert driver == dist
+
+
+@pytest.mark.parametrize(
+    "spark_type, ids",
+    [
+        ("int", [3, 1, 2, -7, 40]),
+        ("long", [2**40 + 3, 2**40 + 1, 2**40 + 2, -(2**40), 7]),
+        # binary order: "B" < "a" < "ab" < "é"
+        ("string", ["ab", "é", "a", "B", "zz"]),
+    ],
+)
+def test_near_dup_clusters_driver_path_keeps_id_type(spark, spark_type, ids):
+    """The driver path's local frame carries the input id type (not a
+    numpy/Arrow default), and component minimums follow Spark's order."""
+    a, b, c, d, e = ids
+    pairs = spark.createDataFrame(
+        [(a, b), (b, c), (d, e)], f"id_i {spark_type}, id_j {spark_type}"
+    )
+    out = dedup.near_dup_clusters(pairs)
+    id_type = pairs.schema["id_i"].dataType
+    assert [f.dataType for f in out.schema] == [id_type, id_type]
+    got = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
+    # Spark's own min, as the distributed path labels
+    groups = [(a, b, c), (d, e)]
+    mins = {
+        row["g"]: row["m"]
+        for row in spark.createDataFrame(
+            [(x, g) for g, xs in enumerate(groups) for x in xs],
+            f"x {spark_type}, g int",
+        ).groupBy("g").agg(F.min("x").alias("m")).collect()
+    }
+    assert got == {x: mins[g] for g, xs in enumerate(groups) for x in xs}
+
+
+def test_near_dup_clusters_empty_schema_matches_distributed(spark, monkeypatch):
+    pairs = spark.createDataFrame([], "id_i string, id_j string")
+    driver = dedup.near_dup_clusters(pairs)
+    _force_distributed(monkeypatch)
+    dist = dedup.near_dup_clusters(pairs)
+    assert driver.schema == dist.schema
+    assert driver.columns == ["doc_id", "cluster_id"]
+    assert driver.collect() == dist.collect() == []
+
+
+def test_resolve_entities_string_ids_driver_path(spark):
+    """End to end through ER: string ids survive the driver path with
+    their type, and the canonical id is the cluster's minimum string."""
+    from orion_etl_oracle_to_postgres_spark.operators.er import resolve_entities
+
+    df = spark.createDataFrame(
+        [
+            ("c-2", "acme widgets"),
+            ("a-9", "acme widgetz"),
+            ("b-1", "acme widgets!"),
+            ("z-0", "zenith gears"),
+        ],
+        "id string, name string",
+    )
+    out = resolve_entities(df, "id", "name", max_distance=1)
+    assert dict(out.dtypes)["entity_id"] == "string"
+    got = {r["id"]: (r["entity_id"], r["is_canonical"]) for r in out.collect()}
+    assert got == {
+        "a-9": ("a-9", True),
+        "b-1": ("a-9", False),
+        "c-2": ("a-9", False),
+        "z-0": ("z-0", True),
+    }
+
+
+def _jobs_for(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job-count guard")
     try:
-        out = {r["doc_id"]: r["cluster_id"] for r in near_dup_clusters(pairs).collect()}
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10}
-    jobs = sc.statusTracker().getJobIdsForGroup("near_dup_clusters_job_count")
-    assert len(jobs) < 36, len(jobs)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_JOB_COUNT_PAIRS = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12)]
+_JOB_COUNT_CLUSTERS = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10}
+
+
+def test_near_dup_clusters_job_count(spark, monkeypatch):
+    """Job-count guard for the distributed convergence loop on a
+    3-clique plus a 2-edge chain (two rounds: one that relabels, one
+    that changes nothing). With one exact change test per round the
+    call runs 24 Spark jobs; the earlier per-round fingerprint plus a
+    confirming extra round and anti-join ran 36 (both local[8])."""
+    _force_distributed(monkeypatch)
+    out, jobs = _jobs_for(
+        spark,
+        "near_dup_clusters_job_count",
+        lambda: _clusters(spark, _JOB_COUNT_PAIRS),
+    )
+    assert out == _JOB_COUNT_CLUSTERS
+    assert jobs < 36, jobs
+
+
+def test_near_dup_clusters_job_count_driver_path(spark):
+    """The same input on the driver path: the pair checkpoint and the
+    Arrow probe, and nothing per round (the distributed loop runs 24)."""
+    out, jobs = _jobs_for(
+        spark,
+        "near_dup_clusters_job_count_driver",
+        lambda: _clusters(spark, _JOB_COUNT_PAIRS),
+    )
+    assert out == _JOB_COUNT_CLUSTERS
+    assert jobs <= 3, jobs
 
 
 def test_minhash_bands_rejects_nondivisible(spark):

@@ -1152,6 +1152,47 @@ def test_declarative_minhash_dedup(spark, tmp_path):
         )
 
 
+@pytest.mark.parametrize("method", ["minhash", "soft"])
+def test_declarative_minhash_dedup_passes_seed(spark, tmp_path, monkeypatch, method):
+    """A declared dedup.seed reaches the inline MinHash pair mining of
+    minhash and soft dedup (the index and semantic paths pass it too)."""
+    import orion_etl_oracle_to_postgres_spark.spec as spec_mod
+    from orion_etl_oracle_to_postgres_spark.compiler import JobContext, compile_table
+    from orion_etl_oracle_to_postgres_spark.operators import dedup as dedup_mod
+
+    seen = []
+    real = dedup_mod.minhash_near_dups
+
+    def spy(*args, **kw):
+        seen.append(kw.get("seed"))
+        return real(*args, **kw)
+
+    monkeypatch.setattr(dedup_mod, "minhash_near_dups", spy)
+    src = tmp_path / "src"
+    spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta!")],
+        ["id", "text"],
+    ).write.parquet(str(src / "docs.parquet"))
+    g = spec_mod.GlobalSpec(
+        connectors=spec_mod.ConnectorsSpec(
+            source_files=spec_mod.FilesConnectorSpec(base_path=str(src))
+        )
+    )
+    t = spec_mod.TableSpec(
+        source_table="docs",
+        target_table="docs_dedup",
+        dedup=spec_mod.DedupSpec(
+            method=method, text_column="text", id_column="id", seed=7
+        ),
+        mappings=[
+            spec_mod.MappingSpec(source="id", target="id"),
+            spec_mod.MappingSpec(source="text", target="text"),
+        ],
+    )
+    compile_table(JobContext(spark=spark, global_spec=g), t)
+    assert seen == [7]
+
+
 def test_declarative_semantic_dedup(spark, tmp_path):
     """dedup method=semantic in YAML: embedding-cosine near-dup cluster
     members drop, min-id survivor kept, distinct vectors untouched;
@@ -3567,3 +3608,28 @@ def test_nb_gate_explain_only_executes_nothing(spark, tmp_path):
 
     with _pt.raises(ValueError, match="not in the mounted model"):
         compile_table(JobContext(spark, g), t)
+
+
+def test_scan_fanout_skips_boolean_key(spark, tmp_path):
+    """A table whose first scalar column is a flag must not hash on it
+    (2 buckets): the fan-out falls through to the next scalar column and
+    fills more than 2 of the session's partitions."""
+    from orion_etl_oracle_to_postgres_spark.sources.files import scan_fanout
+
+    path = str(tmp_path / "flagged.parquet")
+    (
+        spark.range(20_000)
+        .select(
+            (F.col("id") % 2 == 0).alias("active"),
+            F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+            F.col("id"),
+        )
+        .coalesce(1)
+        .write.parquet(path)
+    )
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 1
+    out = scan_fanout(spark, df, path)
+    sizes = out.rdd.glom().map(len).collect()
+    assert sum(sizes) == 20_000
+    assert sum(1 for n in sizes if n) > 2, sizes
