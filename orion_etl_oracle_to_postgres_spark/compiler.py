@@ -48,7 +48,7 @@ from .operators.validations import (
     run_error_checks,
     split_quarantine,
 )
-from .sinks import resolve_sink
+from .sinks import files_target, replace_table, resolve_sink
 from .sources import resolve_source
 from .spec import GlobalSpec, JobSpec, LookupSpec, MappingSpec, TableSpec
 
@@ -132,7 +132,9 @@ class JobContext:
         if conns.target_files is not None:
             from .sources.files import read_file_table
 
-            return read_file_table(self.spark, conns.target_files, table, schema)
+            # no schema: files writes land at <base>/<table> (sinks), so
+            # a <base>/<schema>/<table> copy is never the target
+            return read_file_table(self.spark, conns.target_files, table)
         jdbc_conn = conns.target_jdbc or conns.postgres
         if jdbc_conn is not None:
             from .sources.jdbc import read_jdbc_table
@@ -162,6 +164,36 @@ class JobContext:
             if _is_missing_table_error(e):
                 return None
             raise
+
+    def write_target(
+        self,
+        df: DataFrame,
+        spec: TableSpec,
+        table: Optional[str] = None,
+        *,
+        mode: Optional[str] = None,
+        replace: bool = False,
+        **kw,
+    ) -> None:
+        """Write ``df`` to target table ``table`` (default: the spec's
+        own) through the sinks' target rule, with the spec's schema and
+        the job's JDBC batch size. The spec's ``partition_by``/``sort_by``
+        lay out its own table only; side outputs (rejects, overflow
+        tables) are written flat. ``replace`` overwrites a table the
+        frame's plan reads (``sinks.replace_table``); ``kw`` overrides
+        JDBC writer options (``bulk_loader``'s batch size)."""
+        table = table or spec.target_table
+        own = table == spec.target_table
+        args = (df, self.global_spec.connectors, table, spec.target_schema)
+        layout = {
+            "partition_by": spec.partition_by if own else None,
+            "sort_by": spec.sort_by if own else None,
+        }
+        kw.setdefault("batchsize", min(self.global_spec.batch_size, 10000))
+        if replace:
+            replace_table(*args, **layout, **kw)
+        else:
+            resolve_sink(*args, mode=mode or spec.write_mode, **layout, **kw)
 
     def target_table_columns(self, spec: TableSpec) -> Optional[list[str]]:
         """Target-catalog column list for auto-mapping (P2/S7 parity):
@@ -2193,10 +2225,9 @@ def run_table(
         # the quarantine write and the incremental commit (double-load
         # on the next run); unsupported paths refuse rather than
         # silently leaving a STALE card beside changed data
+        files_target(ctx.global_spec.connectors, spec.target_table, "manifest")
         loader_name0 = spec.loader_plugin or ctx.global_spec.loader_plugin
         reasons = []
-        if ctx.global_spec.connectors.target_files is None:
-            reasons.append("a JDBC target has no directory to put the card in")
         if spec.scd2 is not None:
             reasons.append("scd2 owns its write path")
         if spec.incremental is not None and spec.incremental.mode == "streaming":
@@ -2242,13 +2273,11 @@ def run_table(
             )
 
     if spec.scd2 is not None:
-        merged = _write_scd2(ctx, spec, compiled.df)
+        merged = _write_scd2(ctx, spec, compiled.df, observation)
         _after_write(ctx, spec, compiled, read_metrics=True)
         return merged
 
-    out = _align_for_append(ctx, spec, compiled.df)
-    if observation is not None:
-        out = out.observe(observation, F.count(F.lit(1)).alias("rows"))
+    out = _observe_rows(_align_for_append(ctx, spec, compiled.df), observation)
 
     # resolve the plugin inside try/except KeyError, call it outside —
     # a KeyError from a partially-executed custom loader must propagate
@@ -2286,13 +2315,9 @@ def run_table(
         _after_write(ctx, spec, compiled, read_metrics=False)
         return out
 
+    conns = ctx.global_spec.connectors
     if spec.shards is not None:
-        conns = ctx.global_spec.connectors
-        if conns.target_files is None:
-            raise ValueError(
-                f"{spec.target_table}: shards is a file-layout option; "
-                "a JDBC target has no shard directories"
-            )
+        path, fmt = files_target(conns, spec.target_table, "shards")
         if spec.shards.id_column not in out.columns:
             raise ValueError(
                 f"{spec.target_table}: shards id_column "
@@ -2302,56 +2327,41 @@ def run_table(
 
         export_training_shards(
             out,
-            str(Path(conns.target_files.base_path) / spec.target_table),
+            path,
             spec.shards.id_column,
             n_shards=spec.shards.n,
             seed=spec.shards.seed,
-            fmt=conns.target_files.format,
+            fmt=fmt,
         )
     elif spec.zorder_by:
-        conns = ctx.global_spec.connectors
-        if conns.target_files is None:
-            raise ValueError(
-                f"{spec.target_table}: zorder_by is a file-layout option; "
-                "a JDBC target has no files to cluster"
-            )
+        path, fmt = files_target(conns, spec.target_table, "zorder_by")
         from .sinks.zorder import zorder_write
 
-        base = Path(conns.target_files.base_path)
-        path = str(base / spec.target_table)
-        zorder_write(
-            out, path, list(spec.zorder_by),
-            fmt=conns.target_files.format, mode=spec.write_mode,
-            options={"header": "true"} if conns.target_files.format == "csv" else None,
-        )
+        zorder_write(out, path, list(spec.zorder_by), fmt=fmt, mode=spec.write_mode)
     else:
-        resolve_sink(
-            out,
-            ctx.global_spec.connectors,
-            spec.target_table,
-            spec.target_schema if ctx.global_spec.connectors.target_files is None else None,
-            mode=spec.write_mode,
-            partition_by=spec.partition_by,
-            sort_by=spec.sort_by,
-            **(
-                {}
-                if ctx.global_spec.connectors.target_files is not None
-                else {"batchsize": min(ctx.global_spec.batch_size, 10000)}
-            ),
-        )
+        ctx.write_target(out, spec)
     if spec.manifest:
-        conns = ctx.global_spec.connectors
+        path, fmt = files_target(conns, spec.target_table, "manifest")
         from .sinks.manifest import write_manifest
 
         write_manifest(
             ctx.spark,
-            str(Path(conns.target_files.base_path) / spec.target_table),
-            fmt=conns.target_files.format,
-            options={"header": "true"} if conns.target_files.format == "csv" else None,
+            path,
+            fmt=fmt,
             extra={"source_table": spec.source_table, "target_table": spec.target_table},
         )
     _after_write(ctx, spec, compiled, read_metrics=True)
     return out
+
+
+def _observe_rows(
+    df: DataFrame, observation: Optional["Observation"]
+) -> DataFrame:
+    """Attach ``run_job``'s row-count Observation (if any) to the frame
+    a sink writes, so the count comes from the write itself."""
+    if observation is None:
+        return df
+    return df.observe(observation, F.count(F.lit(1)).alias("rows"))
 
 
 def _after_write(
@@ -2472,17 +2482,7 @@ def _run_streaming_table(
         bdf = bdf.persist()
         try:
             n = bdf.count()
-            resolve_sink(
-                bdf,
-                ctx.global_spec.connectors,
-                table,
-                spec.target_schema
-                if ctx.global_spec.connectors.target_files is None
-                else None,
-                mode="append",
-                partition_by=spec.partition_by if table == spec.target_table else None,
-                sort_by=spec.sort_by if table == spec.target_table else None,
-            )
+            ctx.write_target(bdf, spec, table, mode="append")
             return n
         finally:
             bdf.unpersist()
@@ -2594,7 +2594,12 @@ def _run_streaming_table(
     return compiled.df
 
 
-def _write_scd2(ctx: JobContext, spec: TableSpec, updates: DataFrame) -> DataFrame:
+def _write_scd2(
+    ctx: JobContext,
+    spec: TableSpec,
+    updates: DataFrame,
+    observation: Optional["Observation"] = None,
+) -> DataFrame:
     """Declarative SCD Type-2 load (``TableSpec.scd2`` — VERDICT r3 #4):
     the compiled pipeline output is an update batch merged into the
     versioned dimension at the target via ``operators/scd.py``.
@@ -2602,10 +2607,9 @@ def _write_scd2(ctx: JobContext, spec: TableSpec, updates: DataFrame) -> DataFra
     First run (no target) bootstraps with ``scd2_initial``. Later runs
     read the existing dimension, apply ``scd2_apply`` (one key join +
     union), and replace the target SAFELY even though the merge plan
-    READS it: a files target stages to ``<table>.__scd2`` and swaps
-    directories (same pattern as ``compact_dataset``); a JDBC target
-    eagerly materializes the merged frame (``localCheckpoint``) before
-    the truncating overwrite. The dimension's column set is exactly
+    READS it (``sinks.replace_table``). ``observation`` counts the
+    written dimension's rows during the write. Returns a fresh read of
+    the written dimension. The dimension's column set is exactly
     ``key + compare_columns + validity`` — extra pipeline columns are an
     error (silently dropping them would surprise; project them away in
     the mappings instead)."""
@@ -2656,110 +2660,51 @@ def _write_scd2(ctx: JobContext, spec: TableSpec, updates: DataFrame) -> DataFra
             upd, s.key, s.compare_columns, eff,
             valid_from=s.valid_from, valid_to=s.valid_to,
         )
-        resolve_sink(
-            merged,
-            ctx.global_spec.connectors,
-            spec.target_table,
-            spec.target_schema if ctx.global_spec.connectors.target_files is None else None,
-            mode="overwrite",
-            partition_by=spec.partition_by,
-            sort_by=spec.sort_by,
-        )
+        ctx.write_target(_observe_rows(merged, observation), spec, mode="overwrite")
         logger.info("%s: scd2 bootstrap at %s", spec.target_table, eff)
-        return merged
-
-    need = {s.key, *s.compare_columns, s.valid_from, s.valid_to}
-    lacking = sorted(need - set(dim.columns))
-    if lacking:
-        raise ValueError(
-            f"{spec.target_table}: existing target lacks scd2 columns "
-            f"{lacking} — not a dimension this spec can merge into"
-        )
-    merged = scd2_apply(
-        dim, upd, s.key, s.compare_columns, eff,
-        valid_from=s.valid_from, valid_to=s.valid_to,
-    )
-
-    conns = ctx.global_spec.connectors
-    if conns.target_files is not None:
-        from .sinks.files import write_file_table
-        from .sinks.maintenance import swap_dataset
-        from .sources.files import table_path
-
-        stage_table = f"{spec.target_table}.__scd2"
-        write_file_table(
-            merged, conns.target_files, stage_table, None, "overwrite",
-            partition_by=spec.partition_by, sort_by=spec.sort_by,
-        )
-        swap_dataset(
-            ctx.spark,
-            table_path(conns.target_files, spec.target_table, None),
-            table_path(conns.target_files, stage_table, None),
-        )
-        # the merge plan's lineage reads the PRE-swap target — re-executing
-        # it now would consume the new data as the old dim, so hand back a
-        # fresh read of what was actually written
-        merged = ctx._read_target(spec.target_table, spec.target_schema)
     else:
-        # JDBC overwrite truncates the table the merge plan reads —
-        # pin the merged rows first
-        merged = merged.localCheckpoint()
-        resolve_sink(
-            merged,
-            conns,
-            spec.target_table,
-            spec.target_schema,
-            mode="overwrite",
+        need = {s.key, *s.compare_columns, s.valid_from, s.valid_to}
+        lacking = sorted(need - set(dim.columns))
+        if lacking:
+            raise ValueError(
+                f"{spec.target_table}: existing target lacks scd2 columns "
+                f"{lacking} — not a dimension this spec can merge into"
+            )
+        merged = scd2_apply(
+            dim, upd, s.key, s.compare_columns, eff,
+            valid_from=s.valid_from, valid_to=s.valid_to,
         )
-    logger.info("%s: scd2 merge applied at %s", spec.target_table, eff)
-    return merged
+        ctx.write_target(_observe_rows(merged, observation), spec, replace=True)
+        logger.info("%s: scd2 merge applied at %s", spec.target_table, eff)
+    # the merge plan's lineage reads the PRE-write target and the
+    # bootstrap plan re-runs the source: hand back what was written
+    return ctx._read_target(spec.target_table, spec.target_schema)
 
 
 def _write_quarantine(
     ctx: JobContext, spec: TableSpec, compiled: CompiledTable
 ) -> None:
     """Write rows rejected by ``on_fail: quarantine`` rules to
-    ``spec.quarantine_table`` through the same sink machinery as the
-    main output (and the declarative quality_filter's rejects to its
-    ``reject_table``). Without a configured table the rejects are
+    ``spec.quarantine_table`` through the same job-level write as the
+    main output (and the declarative quality_filter's and
+    decontaminate's rejects to their ``reject_table``). Without a
+    configured quarantine table the rejects are
     dropped (quarantine degrades to skip) — warn, because the user
     asked for an audit trail they aren't getting."""
-    if compiled.quality_rejects is not None and spec.quality_filter is not None:
-        resolve_sink(
-            compiled.quality_rejects,
-            ctx.global_spec.connectors,
-            spec.quality_filter.reject_table,
-            spec.target_schema
-            if ctx.global_spec.connectors.target_files is None
-            else None,
-            mode=spec.write_mode,
-        )
-    if compiled.decontam_rejects is not None and spec.decontaminate is not None:
-        resolve_sink(
-            compiled.decontam_rejects,
-            ctx.global_spec.connectors,
-            spec.decontaminate.reject_table,
-            spec.target_schema
-            if ctx.global_spec.connectors.target_files is None
-            else None,
-            mode=spec.write_mode,
-        )
-    if compiled.quarantine is None:
-        return
-    if not spec.quarantine_table:
+    if compiled.quarantine is not None and not spec.quarantine_table:
         logger.warning(
             "%s: quarantine rules fired but no quarantine_table is "
             "configured — rejected rows are dropped without audit",
             spec.target_table,
         )
-        return
-    resolve_sink(
-        compiled.quarantine,
-        ctx.global_spec.connectors,
-        spec.quarantine_table,
-        spec.target_schema if ctx.global_spec.connectors.target_files is None else None,
-        mode=spec.write_mode,
-    )
+    side_outputs = [
+        (spec.quality_filter and spec.quality_filter.reject_table, compiled.quality_rejects),
+        (spec.decontaminate and spec.decontaminate.reject_table, compiled.decontam_rejects),
+        (spec.quarantine_table, compiled.quarantine),
+    ]
+    for table, rejects in side_outputs:
+        if table and rejects is not None:
+            ctx.write_target(rejects, spec, table)
 
 
 def state_dirs(spec: TableSpec) -> "list[tuple]":
@@ -2884,12 +2829,10 @@ def run_job(spark: SparkSession, job: JobSpec) -> dict[str, int]:
         if spec.incremental is not None and spec.incremental.mode == "streaming":
             run_table(ctx, spec)
             n = ctx.stream_counts.get(spec.target_table, 0)
-        elif spec.scd2 is not None or loader_name not in ("default_loader",):
-            # no Observation here: the scd2 branch returns before one
-            # would be attached, and a custom loader need not run any
+        elif loader_name not in ("default_loader",):
+            # no Observation here: a custom loader need not run any
             # action on the observed plan — obs.get would block forever.
-            # Count the returned frame instead (scd2: the merged
-            # dimension; a loader: the honest second pass).
+            # Count the returned frame instead (the honest second pass).
             n = run_table(ctx, spec).count()
         else:
             obs = Observation(f"etl_{spec.target_table}")

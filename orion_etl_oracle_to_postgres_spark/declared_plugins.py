@@ -82,22 +82,7 @@ def bulk_loader(df, ctx, spec):
     (batchsize 50k instead of the batch_size-capped default) —
     ``execute_values(page_size=1000)`` scaled up. File targets write
     identically to the default path."""
-    from .sinks import resolve_sink
-
-    resolve_sink(
-        df,
-        ctx.global_spec.connectors,
-        spec.target_table,
-        spec.target_schema if ctx.global_spec.connectors.target_files is None else None,
-        mode=spec.write_mode,
-        partition_by=spec.partition_by,
-        sort_by=spec.sort_by,
-        **(
-            {}
-            if ctx.global_spec.connectors.target_files is not None
-            else {"batchsize": 50_000}
-        ),
-    )
+    ctx.write_target(df, spec, batchsize=50_000)
 
 
 @registry.register("auto_mapping", "directory_column_mapping")

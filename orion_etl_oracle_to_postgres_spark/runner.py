@@ -415,40 +415,38 @@ def main(argv: list[str] | None = None) -> int:
         except Exception:  # noqa: BLE001 — static confs can't be set post-build
             logger.warning("spark_conf %r is static — set it before session build", k)
 
-    if args.compact:
-        conns = job.global_spec.connectors
-        if conns.target_files is None:
-            raise SystemExit("--compact needs a files target connector")
-        from pathlib import Path
+    def _files_target(table: str, verb: str) -> tuple[str, str]:
+        from .sinks import files_target
 
+        try:
+            return files_target(job.global_spec.connectors, table, verb)
+        except ValueError as e:
+            raise SystemExit(str(e)) from None
+
+    if args.compact:
         from .sinks.maintenance import compact_dataset
 
+        path, fmt = _files_target(args.compact, "--compact")
         # honor the table's CONFIGURED layout: compacting a
         # hive-partitioned table flat (or a sorted table unsorted)
         # would destroy the layout the job spec promises
         tspec = next(
             (t for t in job.tables if t.target_table == args.compact), None
         )
-        path = str(Path(conns.target_files.base_path) / args.compact)
         stats = compact_dataset(
             spark, path,
             target_file_mb=args.target_file_mb,
-            fmt=conns.target_files.format,
+            fmt=fmt,
             partition_by=tspec.partition_by if tspec else None,
             sort_by=tspec.sort_by if tspec else None,
-            options={"header": "true"} if conns.target_files.format == "csv" else None,
         )
         logger.info("compacted %s: %s", args.compact, stats)
         return 0
 
     if args.retention:
-        from pathlib import Path
-
         from .sinks.maintenance import retention_delete
 
-        conns = job.global_spec.connectors
-        if conns.target_files is None:
-            raise SystemExit("--retention needs a files target connector")
+        path, _ = _files_target(args.retention, "--retention")
         tspec = next(
             (t for t in job.tables if t.target_table == args.retention), None
         )
@@ -459,13 +457,9 @@ def main(argv: list[str] | None = None) -> int:
             )
         if not args.keep_from:
             raise SystemExit("--retention needs --keep-from <cutoff>")
-        # files targets always write to <base>/<table>: the compiler
-        # passes schema=None to the files sink (compiler.py resolve_sink
-        # call — target_schema is a JDBC concept), same layout --compact
-        # assumes
         stats = retention_delete(
             spark,
-            str(Path(conns.target_files.base_path) / tspec.target_table),
+            path,
             partition_col=tspec.partition_by[0],
             keep_from=args.keep_from,
             value_type=args.retention_type,
@@ -1011,16 +1005,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.layout:
         import json as _json
 
-        conns = job.global_spec.connectors
-        if conns.target_files is None:
-            raise SystemExit("--layout needs a files target connector")
-        from pathlib import Path
-
         from .sinks.maintenance import small_file_report
 
-        rep = small_file_report(
-            spark, str(Path(conns.target_files.base_path) / args.layout)
-        )
+        rep = small_file_report(spark, _files_target(args.layout, "--layout")[0])
         print(_json.dumps(rep))
         return 0
 

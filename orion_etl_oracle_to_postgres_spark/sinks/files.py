@@ -15,12 +15,11 @@ def write_file_table(
     df: DataFrame,
     conn: FilesConnectorSpec,
     table: str,
-    schema: str | None = None,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
     sort_by: list[str] | None = None,
 ) -> None:
-    """Write one table directory. ``partition_by`` produces a
+    """Write the table directory ``<base>/<table>``. ``partition_by`` produces a
     hive-style ``col=value/`` layout, which later reads prune by
     partition (the 100 TB analogue: time/tenant partition columns turn
     full scans into directory listings). Before a partitioned write the
@@ -32,8 +31,7 @@ def write_file_table(
     min/max pruning and better compression), never a global sort — a
     global sort would be an all-data range shuffle with nothing to show
     for it at read time."""
-    base = Path(conn.base_path)
-    path = base / schema / table if schema else base / table
+    path = Path(conn.base_path) / table
     if partition_by:
         df = df.repartition(*partition_by)
     if sort_by:

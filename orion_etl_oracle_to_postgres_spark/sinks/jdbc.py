@@ -10,6 +10,12 @@ Atomicity note (SURVEY.md §7.4.9): the reference's TRUNCATE-then-commit-
 per-batch leaves partial loads visible mid-run. ``staging_swap=True``
 writes to ``<table>__stg`` and atomically renames via driver-side DDL —
 cleaner semantics, off by default for parity.
+
+Derby targets (the generic ``target_jdbc`` connector): Spark's Derby
+dialect binds a NULL string as CLOB, and Derby refuses a CLOB value for
+a VARCHAR column (SQLState 22005), so a pre-created Derby target needs
+CLOB text columns. The bind type comes from the JVM-side dialect;
+nothing in this module can change it.
 """
 
 from __future__ import annotations
@@ -28,7 +34,6 @@ def write_jdbc_table(
     *,
     batchsize: int = 1000,
     truncate: bool = True,
-    num_partitions: int | None = None,
     staging_swap: bool = False,
 ) -> None:
     target = f"{schema}.{table}" if schema else table
@@ -63,18 +68,15 @@ def write_jdbc_table(
             "append" if cloned else "overwrite",
             batchsize,
             truncate=False,
-            num_partitions=num_partitions,
         )
         _swap_tables(conn, schema, table)
         return
-    _write(df, conn, target, mode, batchsize, truncate, num_partitions)
+    _write(df, conn, target, mode, batchsize, truncate)
 
 
-def _write(df, conn, dbtable, mode, batchsize, truncate, num_partitions=None):
+def _write(df, conn, dbtable, mode, batchsize, truncate):
     from ..sources.jdbc import dialect_options
 
-    if num_partitions:
-        df = df.repartition(num_partitions)
     w = df.write.format("jdbc").mode(mode)
     # dialect defaults first (e.g. Postgres reWriteBatchedInserts /
     # stringtype=unspecified) so the explicit options below override

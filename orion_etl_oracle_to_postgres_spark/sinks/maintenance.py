@@ -67,12 +67,12 @@ def compact_dataset(
     fmt: str = "parquet",
     partition_by: list[str] | None = None,
     sort_by: list[str] | None = None,
-    options: dict | None = None,
 ) -> dict:
     """Rewrite the dataset at ``path`` into ~``target_file_mb`` files.
-    ``options`` apply to BOTH the read and the rewrite (csv callers
-    pass ``{"header": "true"}`` — reading a headered csv without it
-    would ingest the header row as data and write it back headerless).
+    A csv dataset is read AND rewritten with its header row (without
+    it the header would be ingested as data and written back
+    headerless); its columns stay text, so the rewrite copies the csv
+    values unchanged.
 
     Output file count = ceil(current total bytes / target) — computed
     from the actual layout, not guessed. ``partition_by`` preserves a
@@ -92,8 +92,9 @@ def compact_dataset(
     if not fs.exists(jpath):
         raise FileNotFoundError(path)
 
+    options = {"header": "true"} if fmt == "csv" else {}
     total = dataset_bytes(spark, path)
-    df = spark.read.format(fmt).options(**(options or {})).load(path)
+    df = spark.read.format(fmt).options(**options).load(path)
     files_before = len(df.inputFiles())
     n_out = max(1, -(-total // (target_file_mb * 1024 * 1024)))
 
@@ -111,15 +112,13 @@ def compact_dataset(
         staged = staged.sortWithinPartitions(*sort_by)
 
     tmp = path.rstrip("/") + ".__compact"
-    writer = staged.write.mode("overwrite").format(fmt)
-    for k, v in (options or {}).items():
-        writer = writer.option(k, v)
+    writer = staged.write.mode("overwrite").format(fmt).options(**options)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(tmp)
 
     files_out = len(
-        spark.read.format(fmt).options(**(options or {})).load(tmp).inputFiles()
+        spark.read.format(fmt).options(**options).load(tmp).inputFiles()
     )
     swap_dataset(spark, path, tmp)
     logger.info(

@@ -32,13 +32,16 @@ def write_manifest(
     path: str,
     *,
     fmt: str = "parquet",
-    options: Optional[dict] = None,
     extra: Optional[dict] = None,
 ) -> dict:
     """Profile the dataset at ``path`` and write ``_manifest.json``
     beside it. Returns the manifest dict. ``extra`` merges caller
-    metadata (job name, load id, git sha...) into the document."""
-    df = spark.read.format(fmt).options(**(options or {})).load(path)
+    metadata (job name, load id, git sha...) into the document. A csv
+    dataset is read with its header row."""
+    reader = spark.read.format(fmt)
+    if fmt == "csv":
+        reader = reader.option("header", "true")
+    df = reader.load(path)
     aggs = [F.count(F.lit(1)).alias("__n")] + [
         F.count(F.when(F.col(c).isNull(), 1)).alias(f"__nulls_{i}")
         for i, c in enumerate(df.columns)

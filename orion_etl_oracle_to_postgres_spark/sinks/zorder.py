@@ -76,7 +76,6 @@ def zorder_write(
     n_files: int | None = None,
     fmt: str = "parquet",
     mode: str = "overwrite",
-    options: dict | None = None,
 ) -> None:
     """Write ``df`` clustered along the Z-curve of ``by``: range-
     partition on the Morton key (contiguous curve segments per file)
@@ -84,9 +83,8 @@ def zorder_write(
     box in ALL ``by`` columns. ``n_files`` defaults to the current
     partition count. One shuffle (the range partitioner's sample +
     exchange) — the price of the layout, paid once per write, repaid
-    by every pruned scan after. ``options`` are writer options for
-    formats that need them (csv callers pass ``{"header": "true"}`` to
-    match every other file path's read convention)."""
+    by every pruned scan after. A csv write carries a header row, the
+    convention every other file path reads and writes."""
     key = zorder_key(df, by, bits=bits)
     staged = df.withColumn("__zk", key)
     n = n_files or df.rdd.getNumPartitions()
@@ -97,6 +95,6 @@ def zorder_write(
         .write.mode(mode)
         .format(fmt)
     )
-    for k, v in (options or {}).items():
-        writer = writer.option(k, v)
+    if fmt == "csv":
+        writer = writer.option("header", "true")
     writer.save(path)

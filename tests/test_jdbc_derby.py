@@ -239,3 +239,46 @@ def test_versioned_lookup_against_live_jdbc_dim(spark, derby, tmp_path):
     )
     out = {r["id"]: r["code"] for r in compile_table(ctx, spec).df.collect()}
     assert out == {1: "old", 2: "new"}
+
+
+def test_scd2_merge_into_live_jdbc_target(spark, derby, tmp_path):
+    """SCD2 through a JDBC target: the bootstrap creates the dimension,
+    the merge night replaces the table its own merge plan reads
+    (materialized before the truncating overwrite), and ``run_job``
+    reports each night's rows from the write."""
+    import orion_etl_oracle_to_postgres_spark.spec as spec_mod
+    from orion_etl_oracle_to_postgres_spark.compiler import run_job
+
+    def job(night, rows):
+        src = tmp_path / f"scd_src{night}"
+        spark.createDataFrame(rows, ["id", "seg"]).write.parquet(str(src / "cust.parquet"))
+        return spec_mod.JobSpec(
+            global_spec=spec_mod.GlobalSpec(
+                connectors=spec_mod.ConnectorsSpec(
+                    source_files=spec_mod.FilesConnectorSpec(base_path=str(src)),
+                    target_jdbc=derby,
+                )
+            ),
+            tables=[
+                spec_mod.TableSpec(
+                    source_table="cust",
+                    target_table="dim_scd",
+                    target_schema=None,
+                    mappings=[
+                        spec_mod.MappingSpec(source="id", target="id"),
+                        spec_mod.MappingSpec(source="seg", target="seg"),
+                    ],
+                    scd2=spec_mod.Scd2Spec(
+                        key="id", compare_columns=["seg"], effective_time=night
+                    ),
+                )
+            ],
+        )
+
+    assert run_job(spark, job("2024-01-01", [(1, "A"), (2, "B")])) == {"dim_scd": 2}
+    merge = job("2024-02-01", [(1, "A"), (2, "C"), (3, "D")])
+    assert run_job(spark, merge) == {"dim_scd": 4}
+    got = read_jdbc_table(spark, derby, "dim_scd")
+    assert sorted((r["id"], r["seg"]) for r in got.collect()) == [
+        (1, "A"), (2, "B"), (2, "C"), (3, "D"),
+    ]

@@ -1009,39 +1009,60 @@ def test_scd2_rejects_extra_columns_and_custom_loader(spark, tmp_path):
         run_table(ctx, t2)
 
 
-def test_run_job_with_scd2_table_reports_rows(spark, tmp_path):
-    """run_job must not block on an Observation the scd2 branch never
-    attaches (review finding r4 #2) — it counts the merged dimension."""
+def test_run_job_with_scd2_table_reports_rows(spark, tmp_path, monkeypatch):
+    """run_job reports an scd2 table's rows from the write's own
+    Observation (bootstrap and merge night alike) — no second pass over
+    the dimension, which on a bootstrap night would re-run the source."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
     import orion_etl_oracle_to_postgres_spark.spec as spec_mod
     from orion_etl_oracle_to_postgres_spark.compiler import run_job
 
-    src = tmp_path / "src"
     out = tmp_path / "out"
-    spark.createDataFrame([(1, "A"), (2, "B")], ["id", "seg"]).write.parquet(
-        str(src / "cust.parquet")
-    )
-    job = spec_mod.JobSpec(
-        global_spec=spec_mod.GlobalSpec(
-            connectors=spec_mod.ConnectorsSpec(
-                source_files=spec_mod.FilesConnectorSpec(base_path=str(src)),
-                target_files=spec_mod.FilesConnectorSpec(base_path=str(out)),
-            )
-        ),
-        tables=[
-            spec_mod.TableSpec(
-                source_table="cust",
-                target_table="dim_cust",
-                mappings=[
-                    spec_mod.MappingSpec(source="id", target="id"),
-                    spec_mod.MappingSpec(source="seg", target="seg"),
-                ],
-                scd2=spec_mod.Scd2Spec(
-                    key="id", compare_columns=["seg"], effective_time="2024-01-01"
-                ),
-            )
-        ],
-    )
-    assert run_job(spark, job) == {"dim_cust": 2}
+
+    def job(night, rows):
+        src = tmp_path / f"src{night}"
+        spark.createDataFrame(rows, ["id", "seg"]).write.parquet(
+            str(src / "cust.parquet")
+        )
+        return spec_mod.JobSpec(
+            global_spec=spec_mod.GlobalSpec(
+                connectors=spec_mod.ConnectorsSpec(
+                    source_files=spec_mod.FilesConnectorSpec(base_path=str(src)),
+                    target_files=spec_mod.FilesConnectorSpec(base_path=str(out)),
+                )
+            ),
+            tables=[
+                spec_mod.TableSpec(
+                    source_table="cust",
+                    target_table="dim_cust",
+                    mappings=[
+                        spec_mod.MappingSpec(source="id", target="id"),
+                        spec_mod.MappingSpec(source="seg", target="seg"),
+                    ],
+                    scd2=spec_mod.Scd2Spec(
+                        key="id", compare_columns=["seg"], effective_time=night
+                    ),
+                )
+            ],
+        )
+
+    bootstrap = job("2024-01-01", [(1, "A"), (2, "B")])
+    merge = job("2024-02-01", [(1, "A"), (2, "C"), (3, "D")])
+    counted = []
+    real_count = ClassicDataFrame.count
+
+    def spy_count(self):
+        counted.append(self)
+        return real_count(self)
+
+    monkeypatch.setattr(ClassicDataFrame, "count", spy_count)
+    assert run_job(spark, bootstrap) == {"dim_cust": 2}
+    # merge night: 1 unchanged, 2 closed + reopened, 3 new
+    assert run_job(spark, merge) == {"dim_cust": 4}
+    assert counted == []
+    monkeypatch.undo()
+    assert spark.read.parquet(str(out / "dim_cust")).count() == 4
 
 
 def test_watermark_literal_follows_column_type():
